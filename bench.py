@@ -619,7 +619,6 @@ def main() -> None:
             "controlled microbench (min-of-9 interleaved), end-to-end "
             "within machine noise at sf0.1 task sizes (decode is ~24us/"
             "1.1KB record; 32-way local runs are scheduling-bound). "
-            "SPARK_GRAFT_DICT_DECODE=1 selects the r3 dict path for A/B. "
             "r4 final: ingest_1core_mb_per_sec is the SAME chain on one "
             "task — the decoder+normalize pipeline speed with zero "
             "task-launch/worker-attach/barrier share (the whole sf0.1 "

@@ -71,15 +71,8 @@ def _lang_quality_filtered(docs, langs, min_quality, cols):
     are expectations-suite invariants, and the DuckDB curation oracles
     compose the same per-row CTEs through doc_id joins), so the inner
     joins were row-preserving and the fold is exact: identical
-    expressions, identical rows.
-
-    _spread (r12): the per-row lang/quality regex CPU otherwise rides
-    the raw scan's 1-2 splits (single-row-group fixture files) and
-    serializes on one core; no-op whenever the scan itself has enough
-    splits — see dedup._spread."""
-    from .dedup import CPU_SPREAD_TARGET_BYTES, _spread
-
-    docs = _spread(docs, CPU_SPREAD_TARGET_BYTES, "doc_id")
+    expressions, identical rows.  The filter is map-only (no exchange):
+    it composes into every curation plan without adding a shuffle."""
     return (
         docs.select(
             "doc_id",

@@ -74,17 +74,16 @@ def decontaminate(
     # would re-inline the whole n-gram transform into a pushed-down
     # size()>0 filter and evaluate it twice per row (measured 20s -> ~2s
     # at sf0.1; same trap documented at dedup.py minhash_signatures).
-    from .dedup import CPU_SPREAD_TARGET_BYTES, _spread
-
     bench_grams = (
         doc_ngrams(bench, n)
         .select(F.explode_outer("g").alias("s"))
         .where(F.col("s").isNotNull())
         .distinct()
     )
-    # _spread on the train side (r12): see contamination_score below.
+    # the train side streams into the broadcast join without an
+    # exchange of its own
     train_grams = (
-        doc_ngrams(_spread(train, CPU_SPREAD_TARGET_BYTES, "doc_id"), n)
+        doc_ngrams(train, n)
         .select("doc_id", F.explode_outer("g").alias("s"))
         .where(F.col("s").isNotNull())
     )

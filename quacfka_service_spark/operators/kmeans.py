@@ -56,23 +56,11 @@ PROTO_TOP = 5
 
 def _quantized(emb: DataFrame) -> DataFrame:
     """(vec_id, label, qv array<long>): floor-quantized coordinates.
-
-    _spread (r12): the embeddings fixture is a single row-group, so
-    the scan is ONE split and every consumer's per-row work (the HOF
-    quantize, each Lloyd round's assign+fold kernel, silhouette's
-    map-only pass, prototypicality's distance fold) serialized on one
-    core; no-op whenever the scan itself has enough splits (any
-    at-scale input) — see dedup._spread.  Partitioning cannot change
-    any consumer's result: distances/argmin are per-row, and every
-    aggregate downstream is an exact int64/decimal sum (commutative)
-    or a sort_array'd collect."""
-    from .dedup import CPU_SPREAD_TARGET_BYTES, _spread
-
+    A pure projection: the assignment subtree built on it stays
+    map-only (zero exchanges)."""
     v = F.col("embedding").cast("array<double>")
     qv = F.transform(v, lambda x: F.floor(x * F.lit(float(Q_SCALE))).cast("long"))
-    return _spread(emb, CPU_SPREAD_TARGET_BYTES, "vec_id").select(
-        "vec_id", "label", qv.alias("qv")
-    )
+    return emb.select("vec_id", "label", qv.alias("qv"))
 
 
 def _qv_matrix(col, n: int):

@@ -980,12 +980,7 @@ def centroid_assign(emb: DataFrame, dim: int = EMB_DIM) -> DataFrame:
             "label", F.lit(None).cast("string").alias("assigned_label")
         ).groupBy("label", "assigned_label").agg(F.count(F.lit(1)).alias("n"))
     labels_lit = F.array(*[F.lit(x) for x in labels])
-    # _spread (r12): the per-row argmax over the |labels| literal
-    # centroid array otherwise runs on the raw scan's single split;
-    # see dedup._spread (no-op at scan scale, values are per-row).
-    from .dedup import CPU_SPREAD_TARGET_BYTES, _spread
-
-    d = _spread(emb, CPU_SPREAD_TARGET_BYTES, "vec_id").select(
+    d = emb.select(
         "vec_id", "label", v.alias("v")
     ).select(
         "vec_id",

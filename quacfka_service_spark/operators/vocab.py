@@ -43,14 +43,7 @@ VOCAB_K = 24
 def _doc_tokens(docs: DataFrame) -> DataFrame:
     # explode_outer + isNotNull (not plain explode): keeps the split
     # from being re-inlined into a generated size()>0 filter.
-    # _spread (r12): tokenize + explode otherwise inherits the raw
-    # scan's 1-2 splits (single-row-group fixture files) and
-    # serializes on one core; no-op at scan scale — see dedup._spread.
-    from .dedup import CPU_SPREAD_TARGET_BYTES, _spread
-
-    w = _spread(docs, CPU_SPREAD_TARGET_BYTES, "doc_id").select(
-        "doc_id", _words(F.col("text")).alias("w")
-    )
+    w = docs.select("doc_id", _words(F.col("text")).alias("w"))
     return (
         w.select("doc_id", F.explode_outer("w").alias("tok"))
         .where(F.col("tok").isNotNull() & (F.col("tok") != ""))

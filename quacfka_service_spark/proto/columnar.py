@@ -1,17 +1,22 @@
 """Code-generated COLUMNAR protobuf decoders: wire bytes -> Arrow arrays
-with no per-record dict materialization.
+with no per-record dict materialization.  This is the service's one
+Python decoder (proto/decode.py runs it inside ``mapInArrow``);
+``wire.decode_message`` is the interpretive reference it is tested
+against.
 
-fastdecode.py decodes each record into ~20 nested dicts which
-``pa.RecordBatch.from_pylist`` then re-walks — every field is touched
-twice and allocated once as a Python object graph per record.  This
-module compiles, from the same wire specs, decoders that append each
-field DIRECTLY into per-leaf Python lists (the columnar accumulators);
-the Arrow batch is then assembled bottom-up ONCE per batch with
+The reference's ingest hot path is *generated* zero-copy decode
+(gen/bidrequest_vtproto.pb.go — protoc-plugin output, one specialized
+Unmarshal per message).  This module compiles, per message spec in
+wire.py, a specialized Python function with the tag dispatch unrolled
+into a binary tree of comparisons over the precomputed
+``field_number << 3 | wire_type`` keys, varint reads inlined with a
+1-byte fast path, and submessages parsed in place via (buf, pos, end)
+windows.  Each field is appended DIRECTLY into per-leaf Python lists
+(the columnar accumulators) instead of a per-record dict graph; the
+Arrow batch is then assembled bottom-up ONCE per batch with
 ``pa.array`` / ``StructArray.from_arrays`` / ``ListArray.from_arrays``
 over homogeneous lists — the decoder-level analog of writing a parquet
-column chunk instead of row objects (reference's hot path is the same
-idea in Go: gen/bidrequest_vtproto.pb.go generated unmarshal, round-3
-VERDICT item #6 asked for this columnar step on top).
+column chunk instead of row objects.
 
 Layout per message node (unique integer id per position in the spec
 tree; granularity = one entry per occurrence row):
@@ -25,7 +30,7 @@ tree; granularity = one entry per occurrence row):
 - repeated message f      -> ``o_<id>_<f>``  offsets; child node lists
                              run at ELEMENT granularity
 
-Semantics are pinned IDENTICAL to fastdecode/wire.decode_message
+Semantics are pinned IDENTICAL to wire.decode_message
 (proto3 defaults, absent message -> null struct, repeated -> empty
 list, last-wins duplicate singular message via subtree truncation,
 unknown-field skip, window-overrun detection);
@@ -39,7 +44,89 @@ from __future__ import annotations
 from typing import Any
 
 from . import wire
-from .fastdecode import _INLINE_SKIP, _SIGN32, _SIGN64, _VARINT, _emit_tree, _indent
+
+# inlined varint fast path, shared by all generated branches (emitted at
+# base indent 0; emitters add their own).  Reads the varint at `pos`
+# into `{v}`; multi-byte values fall back to a loop identical to
+# wire.decode_varint.
+_VARINT = """\
+b = buf[pos]; pos += 1
+if b < 128:
+    {v} = b
+else:
+    {v} = b & 127; shift = 7
+    while True:
+        b = buf[pos]; pos += 1
+        if b < 128:
+            {v} |= b << shift; break
+        {v} |= (b & 127) << shift; shift += 7
+        if shift >= 70:
+            raise ValueError("varint too long")"""
+
+# sign reinterpretation, mirroring wire.decode_message exactly: the
+# varint is ALWAYS truncated to the declared field width before the
+# sign fix (wire-standard: C++ protobuf reads int32 as the low 32 bits
+# of the varint).  Every wire-legal encoding is unaffected — a proto3
+# writer sign-extends negative int32 to 64 bits, so legal values live
+# in [0, 2^31) ∪ [2^64-2^31, 2^64) and truncation is the identity on
+# the decoded result.  The mask matters for MALFORMED frames: junk
+# bytes that parse as a mid-range varint (e.g. 562949953421311) must
+# decode to a width-legal value instead of poisoning a downstream
+# int32 Arrow column.
+_SIGN32 = """\
+v &= 4294967295
+if v >= 2147483648: v -= 4294967296"""
+_SIGN64 = """\
+v &= 18446744073709551615
+if v >= 9223372036854775808: v -= 18446744073709551616"""
+
+
+def _indent(block: str, by: str) -> str:
+    return "\n".join(by + ln if ln.strip() else ln for ln in block.splitlines())
+
+
+# Inline unknown-field skip for the two wire types that dominate proto3
+# payloads (varint=0, length-delimited=2): a projected decoder skips
+# most of the record, and the function call into _skip was ~10% of
+# decode wall — the leaf else inlines the hot skip and keeps _skip for
+# the rare fixed32/fixed64 types only.
+_INLINE_SKIP = """\
+wt = key & 7
+if wt == 2:
+    ln = buf[pos]; pos += 1
+    if ln >= 128:
+        ln &= 127; shift = 7
+        while True:
+            b = buf[pos]; pos += 1
+            if b < 128:
+                ln |= b << shift; break
+            ln |= (b & 127) << shift; shift += 7
+    pos += ln
+elif wt == 0:
+    while buf[pos] >= 128: pos += 1
+    pos += 1
+else:
+    pos = _skip(buf, pos, key)"""
+
+
+def _emit_tree(
+    handlers: list[tuple[int, list[str]]], lines: list[str], ind: str
+) -> None:
+    """Binary-search dispatch over sorted (key, handler) pairs; every
+    miss falls through to the inlined unknown-field skip."""
+    if len(handlers) == 1:
+        key, body = handlers[0]
+        lines.append(f"{ind}if key == {key}:")
+        for stmt in body:
+            lines.append(_indent(stmt, ind + "    "))
+        lines.append(f"{ind}else:")
+        lines.append(_indent(_INLINE_SKIP, ind + "    "))
+        return
+    mid = len(handlers) // 2
+    lines.append(f"{ind}if key < {handlers[mid][0]}:")
+    _emit_tree(handlers[:mid], lines, ind + "    ")
+    lines.append(f"{ind}else:")
+    _emit_tree(handlers[mid:], lines, ind + "    ")
 
 
 def _kind_default(kind: str, eager_strings: bool) -> str:
@@ -202,7 +289,7 @@ class _Gen:
 
     def _emit_dec(self, spec: dict, nid: int) -> None:
         # bind appends / lists / helpers as default args (C-array local
-        # access, same trick as fastdecode)
+        # access: one C-array index vs a dict lookup per use)
         binds: list[str] = ["_uf=_uf", "_skip=_skip"]
         for num in sorted(spec):
             name, kind, _sub = spec[num]
@@ -424,14 +511,43 @@ class ColumnarDecoder:
         return out
 
 
-_CACHE: dict[tuple, ColumnarDecoder] = {}
+# --- projection pushdown into the decoder ---------------------------------
+#
+# mapInArrow output is a black box to Catalyst: downstream column pruning
+# cannot reach through it, so a full-width decode pays wire-parse + Arrow
+# conversion + JVM row conversion for all 22 messages even when the
+# consumer reads 10 fields.  The fix is the decoder-level analog of
+# parquet nested-schema pruning: compile a decoder for a PRUNED spec —
+# unneeded fields hit the unknown-field skip path (a length jump, no
+# parse, no allocation).  The JVM from_protobuf path cannot do this
+# (protobuf descriptors are all-or-nothing); it's a genuine advantage of
+# owning the codec.
+
+def prune_spec(spec: dict, paths) -> dict:
+    """Subset of ``spec`` covering the given dotted paths.  A path that
+    names a message keeps that whole submessage ('site.publisher'); a
+    dotted path keeps only the named leaves ('imp.banner.w')."""
+    tree: dict[str, set] = {}
+    for p in paths:
+        head, _, rest = p.partition(".")
+        tree.setdefault(head, set())
+        if rest:
+            tree[head].add(rest)
+    out = {}
+    for num, (name, kind, sub) in spec.items():
+        if name not in tree:
+            continue
+        rests = tree[name]
+        if sub is not None and rests:
+            out[num] = (name, kind, prune_spec(sub, rests))
+        else:
+            out[num] = (name, kind, sub)
+    return out
 
 
 def columnar_decoder_for(paths=None, eager_strings: bool = False) -> ColumnarDecoder:
     """Fresh decoder per call (accumulators are stateful; worker
     processes build one per task)."""
-    from .fastdecode import prune_spec
-
     spec = wire.BIDREQUEST_SPEC if not paths else prune_spec(
         wire.BIDREQUEST_SPEC, sorted(paths)
     )

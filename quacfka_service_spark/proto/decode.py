@@ -7,19 +7,19 @@ Two decode paths (SURVEY.md §7.4):
   generated-code unmarshal (/root/reference/main.go:329-391).  Runs
   inside codegen, no Python hop.  Requires the spark-protobuf jar +
   ``protoc``-compiled descriptor, neither present in the dev container.
-- **Python (fallback, always available):** code-generated wire decoders
-  (fastdecode.py — the pure-Python analog of the reference's vtproto
+- **Python (always available):** the code-generated columnar decoder
+  (columnar.py — the pure-Python analog of the reference's vtproto
   codegen) inside ``mapInArrow`` — Arrow-batched, one Python call per
-  ~10k-row batch, not per row.  Decoded dicts go straight to a typed
-  ``pa.RecordBatch`` (``from_pylist`` against the declared Arrow
-  schema) — no JSON text round-trip, no JVM ``from_json`` re-parse
-  (that double hop was judge r1's one flagged hot-path weakness), and
-  no pandas object-column intermediate (mapInPandas' struct serializer
-  re-walks every nested field Python-side; mapInArrow hands the batch
-  to the JVM as-is).  All downstream operators see the identical schema
-  either way.  The cyclic GC is suspended around each batch: decode
-  allocates ~20 dicts/record with zero cycles, and gen-0 sweeps cost
-  ~15% at full width (refcounting still frees everything).
+  ~10k-row batch, not per row.  Each field is appended straight into
+  per-leaf lists and the typed ``pa.RecordBatch`` is assembled once per
+  batch — no per-record dict graph, no JSON text round-trip, no JVM
+  ``from_json`` re-parse, and no pandas object-column intermediate
+  (mapInArrow hands the batch to the JVM as-is).  All downstream
+  operators see the identical schema either way.  The cyclic GC is
+  suspended around each batch: decode allocates many short-lived
+  objects with zero cycles, and gen-0 sweeps are pure overhead
+  (refcounting still frees everything).  ``wire.decode_message`` is
+  the interpretive reference the decoder is tested against.
 
 Record shape in = Kafka source columns (``value`` binary, ``timestamp``
 timestamp).  The reference's byte hacks map as:
@@ -134,7 +134,7 @@ def decode_bidrequests(
         )
         return out.select("r.*", "event_tm")
 
-    # --- Python wire-format fallback (Arrow-batched, codegen decoders) ---
+    # --- Python wire-format path (Arrow-batched, codegen columnar decoder) ---
     has_ts = "timestamp" in df.columns
     src = df
     if has_ts and not ts_suffix:
@@ -146,7 +146,7 @@ def decode_bidrequests(
         out_schema = BIDREQUEST_SCHEMA
     else:
         from ..schema import struct_of
-        from .fastdecode import prune_spec
+        from .columnar import prune_spec
         from .wire import BIDREQUEST_SPEC
 
         out_schema = T.StructType(
@@ -157,25 +157,15 @@ def decode_bidrequests(
 
     def _decode_batches(batches):
         import gc
-        import os
         import struct
 
         import pyarrow as pa
 
         from pyspark.sql.pandas.types import to_arrow_type
 
-        if os.environ.get("SPARK_GRAFT_DICT_DECODE"):
-            # debugging/A-B fallback: per-record dicts + from_pylist
-            yield from _decode_batches_dict(batches)
-            return
-
         from .columnar import columnar_decoder_for
 
-        # Columnar-accumulator decoder (columnar.py): appends each field
-        # straight into per-leaf lists, Arrow arrays assembled once per
-        # batch — no per-record dict graph + from_pylist re-walk
-        # (measured ~1.2x the dict path on realistic frames).  Lazy
-        # strings (bytes + one C-side utf8-validating cast per column)
+        # Lazy strings (bytes + one C-side utf8-validating cast per column)
         # only when NOT permissive: permissive must fail per record so
         # append_record's rollback drops exactly the bad frame.
         dec = columnar_decoder_for(proj_key, eager_strings=permissive)
@@ -212,50 +202,6 @@ def decode_bidrequests(
                 arrays = dec.finish(payload_struct)
                 arrays.append(pa.array(tms, type=pa.int64()))
                 yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
-            finally:
-                if gc_was_on:
-                    gc.enable()
-
-    def _decode_batches_dict(batches):
-        import gc
-        import struct
-
-        import pyarrow as pa
-
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        from .fastdecode import decoder_for
-
-        decode_raw = decoder_for(proj_key).raw
-        read_ts = struct.Struct("<Q").unpack_from
-        arrow_schema = pa.schema(
-            [pa.field(f.name, to_arrow_type(f.dataType)) for f in out_schema.fields]
-        )
-        for batch in batches:
-            vals = batch.column("value").to_pylist()
-            names = batch.schema.names
-            ts_list = batch.column("_ts_ms").to_pylist() if "_ts_ms" in names else None
-            recs = []
-            gc_was_on = gc.isenabled()
-            gc.disable()
-            try:
-                for i, raw in enumerate(vals):
-                    b = raw if isinstance(raw, bytes) else bytes(raw)
-                    try:
-                        if ts_suffix:
-                            e = len(b) - 8
-                            ms = read_ts(b, e)[0]
-                            rec = decode_raw(b, 0, e)
-                        else:
-                            ms = int(ts_list[i]) if ts_list is not None else 0
-                            rec = decode_raw(b, 0, len(b))
-                    except Exception:
-                        if permissive:
-                            continue
-                        raise
-                    rec["event_tm"] = ms
-                    recs.append(rec)
-                yield pa.RecordBatch.from_pylist(recs, schema=arrow_schema)
             finally:
                 if gc_was_on:
                     gc.enable()

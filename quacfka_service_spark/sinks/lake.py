@@ -17,8 +17,6 @@ this batch, leave the rest) — session.py pins
 Scale notes:
 - Partition values are computed once as columns; the writer hash-splits
   by partition value, so one pass regardless of hours present.
-- ``maxRecordsPerFile`` bounds file size the way the reference's 4200
-  MB rotation bounds DB files (main.go:48).
 - A 100 TB day is ~4 TB/hour-partition: files stay parallel-readable
   because partition dirs shard by task, not one-file-per-hour.
 """
@@ -44,20 +42,16 @@ def with_hour_partitions(df: DataFrame, ts: Column) -> DataFrame:
     )
 
 
-def _write(
-    df: DataFrame, path: str, max_records_per_file: int | None, mode: str = "overwrite"
-) -> None:
-    # mode="overwrite" + dynamic partitionOverwriteMode = the one-shot
-    # batch export (replace exactly the hours present).  mode="append"
-    # = the per-micro-batch streaming path: the reference's {{rand}}
-    # file names mean successive rotated-DB exports *accumulate* files
-    # in an hour dir (OVERWRITE_OR_IGNORE never clobbers); append is
-    # the faithful equivalent (T3's weak late-data contract).
+def write_partitioned(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+    """Write a frame that already carries the four partition columns
+    (one of the ``*_with_partitions`` helpers below)."""
+    # mode="overwrite" + dynamic partitionOverwriteMode replaces exactly
+    # the hours present in ``df`` and leaves the rest (the reference's
+    # OVERWRITE_OR_IGNORE).  The pipeline writes each epoch into its own
+    # ``ingest_batch=<key>`` directory this way, so a replayed epoch
+    # replaces its own files (streaming/pipeline.py).
     writer = df.write.mode(mode).partitionBy(*PARTITION_COLS)
-    writer = writer.option("compression", "zstd")
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-    writer.parquet(path)
+    writer.option("compression", "zstd").parquet(path)
 
 
 def raw_with_partitions(bidreq: DataFrame) -> DataFrame:
@@ -85,25 +79,16 @@ def agg_with_partitions(agg: DataFrame) -> DataFrame:
     )
 
 
-def write_raw_export(
-    bidreq: DataFrame, path: str, max_records_per_file: int | None = None,
-    mode: str = "overwrite",
-) -> None:
+def write_raw_export(bidreq: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Raw export: SELECT * partitioned by payload timestamp."""
-    _write(raw_with_partitions(bidreq), path, max_records_per_file, mode)
+    write_partitioned(raw_with_partitions(bidreq), path, mode)
 
 
-def write_norm_export(
-    norm: DataFrame, path: str, max_records_per_file: int | None = None,
-    mode: str = "overwrite",
-) -> None:
+def write_norm_export(norm: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Flat-table export partitioned by event_time."""
-    _write(norm_with_partitions(norm), path, max_records_per_file, mode)
+    write_partitioned(norm_with_partitions(norm), path, mode)
 
 
-def write_hourly_agg(
-    agg: DataFrame, path: str, max_records_per_file: int | None = None,
-    mode: str = "overwrite",
-) -> None:
+def write_hourly_agg(agg: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Aggregate export."""
-    _write(agg_with_partitions(agg), path, max_records_per_file, mode)
+    write_partitioned(agg_with_partitions(agg), path, mode)

@@ -53,9 +53,19 @@ def compact_partitions(
     Two-phase: compacted files land in ``tmp_path`` first, then a
     dynamic-overwrite write from there replaces exactly the selected
     partitions (Spark refuses to overwrite a path it is reading from,
-    and the staging hop is what a table-format rewrite does anyway)."""
+    and the staging hop is what a table-format rewrite does anyway).
+
+    Refuses (ValueError, before writing anything) a pipeline table
+    with an ``ingest_batch=`` epoch level: compacting it would write
+    ``year=`` directories beside the epoch directories and leave a
+    table Spark can no longer read."""
     tmp_path = tmp_path or path.rstrip("/") + "__compact_tmp"
     df = spark.read.parquet(path)
+    if "ingest_batch" in df.columns:
+        raise ValueError(
+            f"{path} has an ingest_batch= epoch level (a Pipeline lake "
+            "table); compact_partitions only handles year/month/day/hour tables"
+        )
     if where:
         df = df.where(where)
 

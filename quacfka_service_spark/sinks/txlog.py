@@ -52,9 +52,12 @@ Scale shape (100 TB table ≈ 10^5 files of ~1 GB):
   difference between one GET and 10^5 LISTs.
 - Streaming epochs commit with a ``txn`` id (app_id, epoch); a replayed
   epoch after a failure between sink-commit and offset-commit is
-  detected in the log and skipped — exactly-once without the
-  ``ingest_batch=N`` full-overwrite trick (streaming/pipeline.py:152),
-  and concurrent maintenance (compaction) can now run safely alongside.
+  detected in the log and skipped.  This is the pipeline's one epoch
+  rule (streaming/pipeline.py: app_id carries the checkpoint's query
+  id), the same key the plain lake sink puts in its
+  ``ingest_batch=<query id>_<epoch>`` directory name; here it needs no
+  per-epoch directory, and concurrent maintenance (compaction) can run
+  safely alongside.
 
 Reference parity: the reference rotates DuckDB files and rescans
 orphans for at-least-once delivery (/root/reference/main.go:140-195);

@@ -23,6 +23,17 @@ body plus checkpointing:
   the reference's at-least-once + orphan-.db rescan (T4);
 - pacing comes from maxOffsetsPerTrigger / maxFilesPerTrigger (T6).
 
+One epoch rule, both sinks: every table write of an epoch is keyed by
+(query id, epoch id) — the idempotent-sink half of Structured
+Streaming's exactly-once.  The query id is the one the checkpoint
+persists (``<checkpoint>/metadata``), so a restart on the SAME
+checkpoint replays an epoch onto its own key, while a new checkpoint
+(or a ``run_batch``, which gets a fresh key) lands beside earlier
+output instead of overwriting it.  The lake sink writes the epoch
+under ``<table>/ingest_batch=<query id>_<epoch>`` with overwrite, so a
+replay replaces its own files; the txlog sink commits it with txn id
+(``<table>@<query id>``, epoch), so a replay is skipped in the log.
+
 Metrics (T8): a StreamingQueryListener appends one JSON line per
 progress event, the analog of ``o.ReportJSONL()`` appending to
 metrics.json (main.go:62-75,418).
@@ -31,7 +42,9 @@ metrics.json (main.go:62-75,418).
 from __future__ import annotations
 
 import json
+import os
 import time
+import uuid
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
@@ -41,7 +54,13 @@ from pyspark.sql.streaming import StreamingQueryListener
 from ..operators.aggregates import hourly_agg
 from ..operators.normalize import normalize_bidreq
 from ..proto.decode import decode_bidrequests
-from ..sinks.lake import write_hourly_agg, write_norm_export, write_raw_export
+from ..sinks.lake import (
+    PARTITION_COLS,
+    agg_with_partitions,
+    norm_with_partitions,
+    raw_with_partitions,
+    write_partitioned,
+)
 from ..sources.files import kafka_shaped_file_stream
 from ..sources.kafka import KafkaConfig, kafka_stream
 
@@ -92,11 +111,9 @@ class Pipeline:
     _metrics_path: str | None = None
     _available_now: bool = False
     _trigger_secs: float | None = None
-    _write_raw: bool = True
-    _write_norm: bool = True
-    _write_agg: bool = True
     _transform: Callable[[DataFrame], DataFrame] | None = None
     _use_txlog: bool = False
+    _query_id: str | None = None  # the epoch key's query half; see run()
 
     # --- sources ---
     def source_kafka(self, conf: KafkaConfig) -> "Pipeline":
@@ -128,39 +145,24 @@ class Pipeline:
 
     # --- sink ---
     def sink_lake(
-        self,
-        root: str,
-        checkpoint: str,
-        *,
-        raw: bool = True,
-        norm: bool = True,
-        agg: bool = True,
-        metrics_jsonl: str | None = None,
+        self, root: str, checkpoint: str, *, metrics_jsonl: str | None = None
     ) -> "Pipeline":
+        """Each epoch writes raw, norm and hourly agg as hive-partitioned
+        zstd parquet under ``<root>/<table>/ingest_batch=<key>``."""
         self._lake_root = root
         self._checkpoint = checkpoint
-        self._write_raw, self._write_norm, self._write_agg = raw, norm, agg
         self._metrics_path = metrics_jsonl
         return self
 
     def sink_txlog(
-        self,
-        root: str,
-        checkpoint: str,
-        *,
-        raw: bool = True,
-        norm: bool = True,
-        agg: bool = True,
-        metrics_jsonl: str | None = None,
+        self, root: str, checkpoint: str, *, metrics_jsonl: str | None = None
     ) -> "Pipeline":
         """Like sink_lake, but each table is an ACID manifest-commit
         table (sinks/txlog.py): every epoch commits transactionally
-        with a (query, epoch) txn id, so a replayed epoch is a no-op in
-        the log itself — exactly-once without the full-overwrite
-        ``ingest_batch=N`` trick, and compaction/vacuum can run
+        under the same (query, epoch) key, so a replayed epoch is a
+        no-op in the log itself, and compaction/vacuum can run
         concurrently with the stream under snapshot isolation."""
-        self.sink_lake(root, checkpoint, raw=raw, norm=norm, agg=agg,
-                       metrics_jsonl=metrics_jsonl)
+        self.sink_lake(root, checkpoint, metrics_jsonl=metrics_jsonl)
         self._use_txlog = True
         return self
 
@@ -170,125 +172,85 @@ class Pipeline:
         return self
 
     # --- run ---
-    def _export_batch(
-        self, batch_df: DataFrame, batch_id: int, streaming: bool = True
-    ) -> None:
-        """The foreachBatch body = the reference's whole export path
-        (§3.2): one rotated file's worth of rows -> raw + norm + agg.
+    def _decoded(self, df: DataFrame) -> DataFrame:
+        bidreq = decode_bidrequests(df, **self._decode_opts)
+        return bidreq if self._transform is None else self._transform(bidreq)
 
-        Exactly-once: each table's output lands under an
-        ``ingest_batch=<epoch id>`` hive dir written with full
-        overwrite, so a replayed epoch (failure between sink write and
-        offset commit) replaces exactly its own files instead of
-        appending duplicates.  The checkpoint's epoch id is the
-        idempotency key — the role the rotated-file path played in the
-        reference's at-least-once orphan rescan (main.go:140-195),
-        upgraded to exactly-once.  Readers see ingest_batch as a
-        partition column and drop it (sources/files.read_lake)."""
-        bidreq = decode_bidrequests(batch_df, **self._decode_opts)
-        if self._transform is not None:
-            bidreq = self._transform(bidreq)
+    def _query_key(self) -> str:
+        """The query half of the epoch key: the streaming-query id the
+        checkpoint persists (Delta's txn appId rule) — stable across
+        restarts of the SAME checkpoint, so replayed epochs land on
+        their own key; new when the checkpoint is recreated, so a
+        deliberate reprocess lands beside the old output.  Read once
+        per run (run() clears it; Spark writes the metadata file before
+        the first batch).  No readable metadata gives a fresh key: a
+        replay then re-lands rather than overwriting another run."""
+        if self._query_id is None:
+            try:
+                with open(os.path.join(self._checkpoint, "metadata")) as f:
+                    self._query_id = json.load(f)["id"]
+            except (OSError, ValueError, KeyError, TypeError):
+                self._query_id = uuid.uuid4().hex
+        return self._query_id
+
+    def _commit(self, table: str, frame: DataFrame, batch_id: int) -> None:
+        """Land one table's epoch frame (partition columns attached)
+        under the (query, epoch) key — the only per-sink difference."""
+        key = self._query_key()
         if self._use_txlog:
-            self._export_batch_txlog(bidreq, batch_id, streaming=streaming)
-            return
-        bidreq.persist()
-        sub = f"ingest_batch={batch_id}"
+            from ..sinks.txlog import TxTable
+
+            TxTable(f"{self._lake_root}/{table}").commit_epoch(
+                frame, f"{table}@{key}", batch_id, PARTITION_COLS
+            )
+        else:
+            write_partitioned(
+                frame, f"{self._lake_root}/{table}/ingest_batch={key}_{batch_id}"
+            )
+
+    def _export_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        """The foreachBatch body = the reference's whole export path
+        (§3.2): one rotated file's worth of rows -> raw + norm + agg,
+        each committed under the epoch key (module docstring).  The key
+        plays the role the rotated-file path played in the reference's
+        at-least-once orphan rescan (main.go:140-195), upgraded to
+        exactly-once.  Lake readers see ingest_batch as a partition
+        column and drop it (sources/files.read_lake)."""
+        bidreq = self._decoded(batch_df).persist()
         try:
-            if self._write_raw:
-                write_raw_export(bidreq, f"{self._lake_root}/bidreq/{sub}", mode="overwrite")
-            norm = None
-            if self._write_norm or self._write_agg:
-                norm = normalize_bidreq(bidreq)
-            if self._write_norm and self._write_agg:
-                # norm feeds two sinks in this batch: materialize it once
-                norm.persist()
-            if self._write_norm:
-                write_norm_export(norm, f"{self._lake_root}/bidreq_norm/{sub}", mode="overwrite")
-            if self._write_agg:
-                write_hourly_agg(hourly_agg(norm), f"{self._lake_root}/bidreq_hourly/{sub}", mode="overwrite")
-            if norm is not None and self._write_norm and self._write_agg:
+            self._commit("bidreq", raw_with_partitions(bidreq), batch_id)
+            # norm feeds two tables in this batch: materialize it once
+            norm = normalize_bidreq(bidreq).persist()
+            try:
+                self._commit("bidreq_norm", norm_with_partitions(norm), batch_id)
+                self._commit(
+                    "bidreq_hourly", agg_with_partitions(hourly_agg(norm)), batch_id
+                )
+            finally:
                 norm.unpersist()
         finally:
             bidreq.unpersist()
 
-    def _txlog_app_id(self) -> str | None:
-        """Txn identity for txlog epoch commits: the checkpoint's
-        persisted streaming-query id (same rule as Delta's txn appId) —
-        stable across restarts of the SAME checkpoint, so replayed
-        epochs dedup; fresh when the checkpoint dir is recreated, so a
-        deliberate reprocess re-lands instead of being silently
-        swallowed by the old query's txn history."""
-        import hashlib
-        import os
-
-        try:
-            with open(os.path.join(self._checkpoint, "metadata")) as f:
-                return json.load(f)["id"]
-        except (OSError, ValueError, KeyError, TypeError):
-            # metadata not written yet (shouldn't happen once batches
-            # run) — fall back to a checkpoint-path-stable id so
-            # exactly-once still holds across restarts
-            return hashlib.md5(str(self._checkpoint).encode()).hexdigest()
-
-    def _export_batch_txlog(
-        self, bidreq: DataFrame, batch_id: int, streaming: bool = True
-    ) -> None:
-        """Txlog variant of the export body: one ACID table per output.
-        Streaming epochs commit with txn id (table@query_id, epoch);
-        batch mode (run_batch — a deliberate re-export) commits plain
-        appends with no txn, so re-running it re-lands by design."""
-        from ..sinks.lake import (
-            PARTITION_COLS,
-            agg_with_partitions,
-            norm_with_partitions,
-            raw_with_partitions,
-        )
-        from ..sinks.txlog import TxTable
-
-        app = self._txlog_app_id() if streaming else None
-
-        def _commit(table: str, df: DataFrame) -> None:
-            t = TxTable(f"{self._lake_root}/{table}")
-            if app is None:
-                t.append(df, PARTITION_COLS)
-            else:
-                t.commit_epoch(df, f"{table}@{app}", batch_id, PARTITION_COLS)
-
-        bidreq.persist()
-        try:
-            if self._write_raw:
-                _commit("bidreq", raw_with_partitions(bidreq))
-            norm = None
-            if self._write_norm or self._write_agg:
-                norm = normalize_bidreq(bidreq)
-            if self._write_norm and self._write_agg:
-                norm.persist()
-            if self._write_norm:
-                _commit("bidreq_norm", norm_with_partitions(norm))
-            if self._write_agg:
-                _commit("bidreq_hourly", agg_with_partitions(hourly_agg(norm)))
-            if norm is not None and self._write_norm and self._write_agg:
-                norm.unpersist()
-        finally:
-            bidreq.unpersist()
-
-    def run(self) -> "PipelineHandle":
-        if self._source is None or self._lake_root is None:
-            raise ValueError("pipeline needs a source and sink_lake(...)")
+    def _start(self, writer, query_name: str) -> "PipelineHandle":
+        """Metrics listener, checkpoint and trigger shared by both
+        streaming runs, then start the query."""
         listener = None
         if self._metrics_path:
             listener = JsonlMetricsListener(self._metrics_path)
             self.spark.streams.addListener(listener)
-        writer = (
-            self._source.writeStream.foreachBatch(self._export_batch)
-            .option("checkpointLocation", self._checkpoint)
-            .queryName("quacfka-pipeline")
-        )
+        writer = writer.option("checkpointLocation", self._checkpoint).queryName(query_name)
         if self._available_now:
             writer = writer.trigger(availableNow=True)
         elif self._trigger_secs:
             writer = writer.trigger(processingTime=f"{self._trigger_secs} seconds")
         return PipelineHandle(writer.start(), self.spark, listener)
+
+    def run(self) -> "PipelineHandle":
+        if self._source is None or self._lake_root is None:
+            raise ValueError("pipeline needs a source and sink_lake(...)")
+        self._query_id = None  # this run's checkpoint decides the key
+        writer = self._source.writeStream.foreachBatch(self._export_batch)
+        return self._start(writer, "quacfka-pipeline")
 
     def run_incremental_agg(
         self, out_path: str, lateness: str | None = None
@@ -302,35 +264,20 @@ class Pipeline:
 
         if self._source is None:
             raise ValueError("pipeline needs a source")
-        bidreq = decode_bidrequests(self._source, **self._decode_opts)
-        if self._transform is not None:
-            bidreq = self._transform(bidreq)
         agg = incremental_hourly_agg(
-            normalize_bidreq(bidreq), lateness or DEFAULT_LATENESS
+            normalize_bidreq(self._decoded(self._source)), lateness or DEFAULT_LATENESS
         )
-        listener = None
-        if self._metrics_path:
-            listener = JsonlMetricsListener(self._metrics_path)
-            self.spark.streams.addListener(listener)
-        writer = (
-            agg.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_path)
-            .option("checkpointLocation", self._checkpoint)
-            .queryName("quacfka-incremental-agg")
-        )
-        if self._available_now:
-            writer = writer.trigger(availableNow=True)
-        elif self._trigger_secs:
-            writer = writer.trigger(processingTime=f"{self._trigger_secs} seconds")
-        return PipelineHandle(writer.start(), self.spark, listener)
+        writer = agg.writeStream.outputMode("append").format("parquet").option("path", out_path)
+        return self._start(writer, "quacfka-incremental-agg")
 
     def run_batch(self) -> None:
         """One-shot batch mode over a non-streaming source frame — the
-        dev/backfill path (reference parity: re-exporting one DB file)."""
+        dev/backfill path (reference parity: re-exporting one DB file).
+        Each call is a fresh query key, so re-running it re-lands."""
         if self._source is None or self._lake_root is None:
             raise ValueError("pipeline needs a source and sink_lake(...)")
-        self._export_batch(self._source, 0, streaming=False)
+        self._query_id = uuid.uuid4().hex
+        self._export_batch(self._source, 0)
 
 
 @dataclass

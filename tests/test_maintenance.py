@@ -5,11 +5,16 @@ from __future__ import annotations
 
 import glob
 
+import pytest
 from pyspark.sql import functions as F
 
+from quacfka_service_spark.fixtures import build_bidreq
+from quacfka_service_spark.proto.decode import encode_bidrequests
 from quacfka_service_spark.session import load_table
 from quacfka_service_spark.sinks.lake import with_hour_partitions
 from quacfka_service_spark.sinks.maintenance import compact_partitions
+from quacfka_service_spark.sources.files import read_lake
+from quacfka_service_spark.streaming.pipeline import Pipeline
 
 from .conftest import SF_DIR
 
@@ -108,3 +113,29 @@ def test_repeated_compaction_does_not_resurrect_stale_staging(spark, tmp_path):
     assert spark.read.parquet(lake).where("month='2'").count() == 10
     # staging dir is cleaned up after commit
     assert not glob.glob(lake + "__compact_tmp/**/*.parquet", recursive=True)
+
+
+def test_compaction_refuses_a_pipeline_lake(spark, tmp_path):
+    """A Pipeline lake table has an ingest_batch= level above the hour
+    partitions; compaction must refuse it before writing anything, and
+    the table must still read back every row."""
+    bidreq = build_bidreq(spark, SF_DIR)
+    src = encode_bidrequests(bidreq)
+    lake = str(tmp_path / "lake")
+    (
+        Pipeline(spark)
+        .source_dataframe(src)
+        .decode(confluent_prefix=True, ts_suffix=True)
+        .sink_lake(lake, str(tmp_path / "ckpt"))
+        .run_batch()
+    )
+    n = bidreq.count()
+    assert read_lake(spark, lake, "bidreq").count() == n
+    files_before = sorted(_files(lake))
+
+    with pytest.raises(ValueError, match="ingest_batch"):
+        compact_partitions(spark, f"{lake}/bidreq")
+
+    # nothing written: not in the table, not in its staging dir
+    assert sorted(_files(lake)) == files_before
+    assert read_lake(spark, lake, "bidreq").count() == n

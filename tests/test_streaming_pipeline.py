@@ -135,7 +135,7 @@ def test_pipeline_batch_mode(spark, input_dir, tmp_path_factory):
         Pipeline(spark)
         .source_dataframe(spark.read.parquet(input_dir))
         .decode(confluent_prefix=True, ts_suffix=True)
-        .sink_lake(lake, checkpoint="unused", norm=False, agg=True, raw=False)
+        .sink_lake(lake, checkpoint="unused")
         .run_batch()
     )
     agg = read_lake(spark, lake, "bidreq_hourly")
@@ -146,14 +146,14 @@ def test_pipeline_batch_mode(spark, input_dir, tmp_path_factory):
 def test_exactly_once_epoch_replay(spark, input_dir, tmp_path_factory):
     """A replayed epoch (failure after sink write, before offset
     commit) must replace its own output, not duplicate it — the
-    ingest_batch=N overwrite contract (T4 exactly-once; the reference
+    (query, epoch) overwrite contract (T4 exactly-once; the reference
     is only at-least-once, main.go:140-195)."""
     lake = str(tmp_path_factory.mktemp("lake_replay"))
     pipe = (
         Pipeline(spark)
         .source_dataframe(spark.read.parquet(input_dir))
         .decode(confluent_prefix=True, ts_suffix=True)
-        .sink_lake(lake, checkpoint="unused", norm=False, agg=False)
+        .sink_lake(lake, checkpoint="unused")
     )
     batch = spark.read.parquet(input_dir)
     pipe._export_batch(batch, 7)
@@ -162,6 +162,67 @@ def test_exactly_once_epoch_replay(spark, input_dir, tmp_path_factory):
     assert read_lake(spark, lake, "bidreq").count() == c1
     pipe._export_batch(batch, 8)  # a genuinely new epoch accumulates
     assert read_lake(spark, lake, "bidreq").count() == 2 * c1
+
+
+def _read_lake_rows(spark, lake):
+    return read_lake(spark, lake, "bidreq_norm").count()
+
+
+def _read_txlog_rows(spark, lake):
+    from quacfka_service_spark.sinks.txlog import TxTable
+
+    return TxTable(f"{lake}/bidreq_norm").read(spark).count()
+
+
+@pytest.mark.parametrize(
+    "sink, rows",
+    [("sink_lake", _read_lake_rows), ("sink_txlog", _read_txlog_rows)],
+    ids=["sink_lake", "sink_txlog"],
+)
+def test_reprocess_after_checkpoint_reset_relands(spark, tmp_path, sink, rows):
+    """One epoch rule for both sinks: the idempotency key is (the
+    checkpoint's query id, epoch).  Rerunning on the same checkpoint
+    lands nothing new; deleting the checkpoint to deliberately
+    reprocess re-lands the data beside the old output instead of
+    overwriting (lake) or being swallowed by (txlog) the earlier
+    query's epochs; run_batch gets a fresh key each call, so it re-lands
+    and never clobbers a streaming epoch 0."""
+    import shutil
+
+    from quacfka_service_spark.proto.decode import encode_bidrequests
+
+    src_dir = str(tmp_path / "framed")
+    bidreq = build_bidreq(spark, SF_DIR)
+    encode_bidrequests(bidreq).coalesce(1).write.parquet(src_dir)
+    n = normalize_bidreq(bidreq).count()
+
+    lake, ckpt = str(tmp_path / "lake"), str(tmp_path / "ckpt")
+
+    def _pipe():
+        pipe = Pipeline(spark).decode(confluent_prefix=True, ts_suffix=True)
+        return getattr(pipe, sink)(lake, ckpt)
+
+    def _run():
+        h = _pipe().source_files(src_dir).trigger(available_now=True).run()
+        h.await_termination(300)
+        assert h.error() is None
+        h.stop()
+
+    _run()
+    assert rows(spark, lake) == n
+    # same checkpoint, rerun: nothing new to process, nothing re-lands
+    _run()
+    assert rows(spark, lake) == n
+    # checkpoint reset = deliberate reprocess: data lands AGAIN
+    shutil.rmtree(ckpt)
+    _run()
+    assert rows(spark, lake) == 2 * n
+    # batch mode: a fresh key per call, re-running re-lands
+    batch = _pipe().source_dataframe(spark.read.parquet(src_dir))
+    batch.run_batch()
+    assert rows(spark, lake) == 3 * n
+    batch.run_batch()
+    assert rows(spark, lake) == 4 * n
 
 
 def test_kafka_config_options():

@@ -181,8 +181,7 @@ def test_manifest_pruned_read_lists_only_matching_files(spark, tmp_path):
 def test_pipeline_sink_txlog_equals_batch_and_survives_replay(spark, tmp_path):
     """The real Pipeline with sink_txlog: streamed micro-batches commit
     into ACID tables; the tables equal the batch result, and a replayed
-    epoch is a log-level no-op (T4 upgraded from the ingest_batch=N
-    overwrite trick)."""
+    epoch is a log-level no-op (T4: the (query, epoch) key)."""
     from quacfka_service_spark.fixtures import build_bidreq
     from quacfka_service_spark.operators.aggregates import hourly_agg
     from quacfka_service_spark.operators.normalize import normalize_bidreq
@@ -198,7 +197,7 @@ def test_pipeline_sink_txlog_equals_batch_and_survives_replay(spark, tmp_path):
         Pipeline(spark)
         .source_files(src_dir, max_files_per_trigger=1)  # 2 micro-batches
         .decode(confluent_prefix=True, ts_suffix=True)
-        .sink_txlog(lake, str(tmp_path / "ckpt"), raw=False)
+        .sink_txlog(lake, str(tmp_path / "ckpt"))
         .trigger(available_now=True)
     )
     handle = pipe.run()
@@ -337,55 +336,6 @@ def test_read_inserts_incremental_consumption(spark, tmp_path):
     empty = t.read_inserts(spark, since_version=t.latest_version())
     assert empty.count() == 0
     assert empty.columns == t.read(spark).columns
-
-
-def test_txlog_reprocess_after_checkpoint_reset_relands(spark, tmp_path):
-    """The txn id is scoped to the streaming QUERY (checkpoint's query
-    id), not the table: deleting the checkpoint to deliberately
-    reprocess must re-land the data, not be swallowed by the previous
-    query's txn history.  run_batch (batch re-export) likewise commits
-    without a txn, so running it twice lands twice by design."""
-    import shutil
-
-    from quacfka_service_spark.fixtures import build_bidreq
-    from quacfka_service_spark.operators.normalize import normalize_bidreq
-    from quacfka_service_spark.proto.decode import encode_bidrequests
-    from quacfka_service_spark.streaming.pipeline import Pipeline
-
-    src_dir = str(tmp_path / "framed")
-    bidreq = build_bidreq(spark, "/root/testdata/sf0.001")
-    encode_bidrequests(bidreq).coalesce(1).write.parquet(src_dir)
-    n = normalize_bidreq(bidreq).count()
-
-    lake, ckpt = str(tmp_path / "lake"), str(tmp_path / "ckpt")
-
-    def _run():
-        pipe = (
-            Pipeline(spark)
-            .source_files(src_dir)
-            .decode(confluent_prefix=True, ts_suffix=True)
-            .sink_txlog(lake, ckpt, raw=False, agg=False)
-            .trigger(available_now=True)
-        )
-        h = pipe.run()
-        h.await_termination(300)
-        assert h.error() is None
-        h.stop()
-        return pipe
-
-    _run()
-    t = TxTable(f"{lake}/bidreq_norm")
-    assert t.read(spark).count() == n
-    # same checkpoint, rerun: nothing new to process, nothing re-lands
-    _run()
-    assert t.read(spark).count() == n
-    # checkpoint reset = deliberate reprocess: data lands AGAIN
-    shutil.rmtree(ckpt)
-    pipe = _run()
-    assert t.read(spark).count() == 2 * n
-    # batch mode (run_batch body): no txn, re-running re-lands
-    pipe._export_batch(spark.read.parquet(src_dir), 0, streaming=False)
-    assert t.read(spark).count() == 3 * n
 
 
 def test_optimize_cluster_by_makes_skipping_selective(spark, tmp_path):
